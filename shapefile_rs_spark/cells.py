@@ -149,22 +149,34 @@ def adaptive_cover_res(
 
 def classify_cover(
     rings, res: int, pad_frac: float = 1e-9, max_pairs: int = 4_000_000
-) -> Tuple[np.ndarray, np.ndarray]:
+) -> Tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
     """TRUE polygon covering at ``res`` (X1 as SURVEYed): bbox cell range ∩
-    per-cell boundary/interior tests.  Returns ``(cells, full)``:
+    per-cell boundary/interior tests.  Returns
+    ``(cells, full, n_edges, edges)``:
 
     * cells NOT touched by the polygon at all are DROPPED (bbox false
       positives stop scaling with polygon size);
     * ``full[i]`` ⇔ cell i lies ENTIRELY in the polygon interior — a point
-      landing there is contained with no ray-cast needed (the refine-UDF
-      bypass), exact because the cell is connected and boundary-free, so
-      containment is constant across it and the cell center's even-odd
-      status decides it;
-    * the rest are BOUNDARY cells — candidates refine exactly as before.
+      landing there is contained with no ray-cast needed, exact because
+      the cell is connected and boundary-free, so containment is constant
+      across it and the cell center's even-odd status decides it;
+    * the rest are BOUNDARY cells.  Each carries the ring edges whose
+      y-range meets its latitude band (the cell's row padded by
+      ``pad_frac``) and whose east end reaches the cell's padded west
+      border: ``edges`` is an (M, 4) float64 array of ``(x1, y1, x2, y2)``
+      rows, cell i's ``n_edges[i]`` rows following cell i-1's; full cells
+      carry none.  A point in the cell can cross no other edge with its +x
+      ray, so the even-odd count over a cell's edges equals the count over
+      the whole ring set (:func:`geom.pip.cell_edges`).
+
+    :func:`cell_id` clamps points beyond the grid into its first/last rows
+    and columns, so those cells' rects (SAT) and bands (edges) are
+    open-ended outward: a clamped point sees every edge it could cross,
+    and a border cell is never FULL.
 
     Boundary detection is a vectorized segment-vs-rect SAT over every ring
     edge × every covering cell (rect padded by ``pad_frac`` of the cell
-    size so ties/νlp-grazings conservatively classify BOUNDARY, never
+    size so ties/ulp-grazings conservatively classify BOUNDARY, never
     FULL).  Edge blocks are chunked to ``max_pairs`` pairs so the E×C
     temporaries stay allocator-friendly on this host.
 
@@ -172,7 +184,7 @@ def classify_cover(
     the reference contains() truth (examples/geotype-example/src/main.rs:
     15-36) — interior-only, holes via even-odd over the full ring set.
     """
-    from .geom.pip import points_in_rings, rings_bbox
+    from .geom.pip import cell_edges, points_in_rings, ring_edges, rings_bbox
 
     rings = [np.asarray(r, dtype=np.float64) for r in rings if len(r) >= 2]
     if not rings:
@@ -182,6 +194,8 @@ def classify_cover(
         return (
             np.empty(0, dtype=np.int64),
             np.empty(0, dtype=bool),
+            np.empty(0, dtype=np.int64),
+            np.empty((0, 4), dtype=np.float64),
         )
     xmin, ymin, xmax, ymax = rings_bbox(rings)
     ix0, iy0 = lonlat_to_ixiy(np.array([xmin]), np.array([ymin]), res)
@@ -191,18 +205,18 @@ def classify_cover(
     n = float(1 << res)
     w, h = 360.0 / n, 180.0 / n
     gx, gy = np.meshgrid(xs, ys)
-    gx, gy = gx.ravel(), gy.ravel()
+    gx, gy = gx.ravel(), gy.ravel()  # row-major: one grid row after another
     C = len(gx)
     rx0 = -180.0 + gx * w
     ry0 = -90.0 + gy * h
     pad_x, pad_y = w * pad_frac, h * pad_frac
-    px0, py0 = rx0 - pad_x, ry0 - pad_y
-    px1, py1 = rx0 + w + pad_x, ry0 + h + pad_y
+    px0 = np.where(gx == 0, -np.inf, rx0 - pad_x)
+    py0 = np.where(gy == 0, -np.inf, ry0 - pad_y)
+    px1 = np.where(gx == n - 1, np.inf, rx0 + w + pad_x)
+    py1 = np.where(gy == n - 1, np.inf, ry0 + h + pad_y)
 
-    x1 = np.concatenate([r[:-1, 0] for r in rings])
-    y1 = np.concatenate([r[:-1, 1] for r in rings])
-    x2 = np.concatenate([r[1:, 0] for r in rings])
-    y2 = np.concatenate([r[1:, 1] for r in rings])
+    E = ring_edges(rings)
+    x1, y1, x2, y2 = E.T
     boundary = np.zeros(C, dtype=bool)
     step = max(1, max_pairs // max(C, 1))
     for s in range(0, len(x1), step):
@@ -215,10 +229,13 @@ def classify_cover(
             & (np.minimum(b1, b2) <= py1)
         )
         dx, dy = a2 - a1, b2 - b1
-        s00 = dx * (py0 - b1) - dy * (px0 - a1)
-        s01 = dx * (py1 - b1) - dy * (px0 - a1)
-        s10 = dx * (py0 - b1) - dy * (px1 - a1)
-        s11 = dx * (py1 - b1) - dy * (px1 - a1)
+        # open-ended border rects make some products inf-inf / 0*inf = NaN:
+        # NaN compares False, so `same` is False and the cell stays BOUNDARY
+        with np.errstate(invalid="ignore"):
+            s00 = dx * (py0 - b1) - dy * (px0 - a1)
+            s01 = dx * (py1 - b1) - dy * (px0 - a1)
+            s10 = dx * (py0 - b1) - dy * (px1 - a1)
+            s11 = dx * (py1 - b1) - dy * (px1 - a1)
         same = ((s00 > 0) & (s01 > 0) & (s10 > 0) & (s11 > 0)) | (
             (s00 < 0) & (s01 < 0) & (s10 < 0) & (s11 < 0)
         )
@@ -227,7 +244,17 @@ def classify_cover(
     center_in = points_in_rings(rx0 + w / 2.0, ry0 + h / 2.0, rings)
     keep = boundary | center_in
     full = center_in & ~boundary
-    return encode_ixiy(gx[keep], gy[keep], res), full[keep]
+
+    # each boundary cell's edges: its grid row's band, trimmed to the edges
+    # reaching its padded west border
+    bnd = boundary[keep]
+    cnt, idx = cell_edges(
+        E, py0[:: len(xs)], py1[:: len(xs)], (gy - iy0[0])[keep][bnd], px0[keep][bnd]
+    )
+    n_edges = np.zeros(len(bnd), dtype=np.int64)
+    n_edges[bnd] = cnt
+    edges = E[idx]
+    return encode_ixiy(gx[keep], gy[keep], res), full[keep], n_edges, edges
 
 
 def cover_polygon_bbox(wkb_blob: bytes, res: int) -> np.ndarray:

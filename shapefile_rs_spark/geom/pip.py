@@ -18,16 +18,14 @@ from typing import List, Sequence
 import numpy as np
 
 
-def crossings_matrix(px: np.ndarray, py: np.ndarray, ring: np.ndarray) -> np.ndarray:
-    """Ray-cast crossing counts of N points against one ring's edges.
+def crossings_matrix(px: np.ndarray, py: np.ndarray, edges: np.ndarray) -> np.ndarray:
+    """Ray-cast crossing counts of N points against (E, 4) edge rows
+    ``(x1, y1, x2, y2)`` (:func:`ring_edges`).
 
-    Returns an int array (N,) of crossings of the +x ray with the ring.
+    Returns an int array (N,) of crossings of the +x ray with the edges.
     Vectorized over points × edges (N×E temporary — callers batch).
     """
-    x1 = ring[:-1, 0][None, :]
-    y1 = ring[:-1, 1][None, :]
-    x2 = ring[1:, 0][None, :]
-    y2 = ring[1:, 1][None, :]
+    x1, y1, x2, y2 = (edges[:, i][None, :] for i in range(4))
     pxc = px[:, None]
     pyc = py[:, None]
     straddle = (y1 > pyc) != (y2 > pyc)
@@ -50,8 +48,72 @@ def points_in_rings(
     for ring in rings:
         if len(ring) < 2:
             continue
-        total += crossings_matrix(px, py, np.asarray(ring, dtype=np.float64))
+        total += crossings_matrix(px, py, ring_edges([ring]))
     return (total % 2) == 1
+
+
+def ring_edges(rings: Sequence[np.ndarray]) -> np.ndarray:
+    """Every edge of every ring as (E, 4) float64 rows ``(x1, y1, x2, y2)``
+    — the operands :func:`crossings_matrix` reads, in the same orientation."""
+    rings = [np.asarray(r, dtype=np.float64) for r in rings if len(r) >= 2]
+    if not rings:
+        return np.empty((0, 4), dtype=np.float64)
+    return np.concatenate([np.hstack([r[:-1], r[1:]]) for r in rings])
+
+
+# a straddling edge's crossing abscissa ((x2-x1)*(lat-y1))/(y2-y1)+x1 rounds
+# past max(x1, x2) by under 4·ε·(|x1|+|x2|); the 360° term also absorbs
+# cell_id's rounding of a lon next to a cell's west border
+_REACH_SLACK = 8.0 * np.finfo(np.float64).eps
+
+
+def cell_edges(
+    edges: np.ndarray, lo: np.ndarray, hi: np.ndarray, band: np.ndarray, x0: np.ndarray
+) -> tuple:
+    """The ring edges each cell's even-odd test needs.
+
+    Cell c lies in the closed latitude band ``[lo[band[c]], hi[band[c]]]``
+    (``lo`` and ``hi`` non-decreasing) and every point that lands in it has
+    ``lon >= x0[c]`` (``-inf`` where
+    :func:`shapefile_rs_spark.cells.cell_id` clamps).  It keeps the edges
+    whose y-range meets its band and whose east end reaches ``x0[c]``: an
+    edge outside the band cannot straddle the latitude of a point in the
+    cell, and the +x ray of a point east of an edge cannot cross it.  Both
+    trims are exact, so the even-odd count over a cell's
+    edges equals the count over all edges for every point in the cell.
+
+    Returns ``(counts, idx)``: cell c's edges are
+    ``edges[idx[start_c : start_c + counts[c]]]``, cells in order.  Work and
+    memory scale with the (band, edge) pairs kept, never band × edge."""
+    lo = np.asarray(lo, dtype=np.float64)
+    hi = np.asarray(hi, dtype=np.float64)
+    band = np.asarray(band, dtype=np.int64)
+    x0 = np.asarray(x0, dtype=np.float64)
+    x1, y1, x2, y2 = edges.T
+    # each edge meets the contiguous band range [first, last)
+    first = np.searchsorted(hi, np.minimum(y1, y2), side="left")
+    last = np.searchsorted(lo, np.maximum(y1, y2), side="right")
+    span = np.maximum(last - first, 0)
+    e = np.repeat(np.arange(len(edges)), span)
+    b = np.repeat(first, span) + _ragged_arange(span)
+    reach = np.maximum(x1, x2) + _REACH_SLACK * (np.abs(x1) + np.abs(x2) + 360.0)
+    # rank every -reach and -x0 together, so (band, rank) is one int key:
+    # sorted pairs put each band's edges farthest-east first, and a cell's
+    # edges are the prefix of its band whose -reach <= -x0
+    vals, inv = np.unique(np.concatenate([-reach[e], -x0]), return_inverse=True)
+    R, m = len(vals) + 1, len(e)
+    key = b * R + inv[:m]
+    order = np.argsort(key, kind="stable")
+    key, e = key[order], e[order]
+    start = np.searchsorted(key, band * R, side="left")
+    counts = np.searchsorted(key, band * R + inv[m:], side="right") - start
+    return counts, e[np.repeat(start, counts) + _ragged_arange(counts)]
+
+
+def _ragged_arange(counts: np.ndarray) -> np.ndarray:
+    """``concatenate([arange(c) for c in counts])`` without the loop."""
+    counts = np.asarray(counts, dtype=np.int64)
+    return np.arange(counts.sum()) - np.repeat(np.cumsum(counts) - counts, counts)
 
 
 def rings_bbox(rings: Sequence[np.ndarray]) -> tuple:

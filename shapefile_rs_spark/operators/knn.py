@@ -300,7 +300,8 @@ def knn_join(
        table prices, for every DISTINCT QUERY CELL (a second ≤ 4^res-row
        aggregation), the minimal Chebyshev radius whose ring holds ≥ k
        points.  Points are then REPLICATED to the query cells whose priced
-       ring reaches them (a driver-built CSR map riding a broadcast) and a
+       ring reaches them (a broadcast equi-join of the points with a
+       driver-built (point cell → query cell) pair table) and a
        cogrouped per-cell numpy kernel computes every resident query's
        exact top-k — candidate PAIRS are enumerated inside vectorized
        numpy, never as Spark rows, so the shuffle carries
@@ -341,13 +342,30 @@ def knn_join(
     # caches — a union of the two cell projections tagged by side (the
     # domain_rank one-action materialization move; separate collects
     # cost a scheduling round-trip each)
+    def cell_or_null(cell, lon, lat):
+        # cell_id_col's clamp (greatest/least) skips nulls, so a row with a
+        # null coordinate still gets a cell: report it as a null cell
+        return F.when(F.col(lon).isNotNull() & F.col(lat).isNotNull(), F.col(cell))
+
     both = (
-        pts.select(F.col("_pcell").alias("_c"), F.lit(1).alias("_side"))
-        .unionByName(qx.select(F.col("_qcell").alias("_c"), F.lit(0).alias("_side")))
+        pts.select(cell_or_null("_pcell", lon_col, lat_col).alias("_c"), F.lit(1).alias("_side"))
+        .unionByName(
+            qx.select(cell_or_null("_qcell", q_lon, q_lat).alias("_c"), F.lit(0).alias("_side"))
+        )
         .groupBy("_c", "_side")
         .count()
         .collect()
     )
+    # a row with a null coordinate has no true cell and no distance: fail
+    # loudly instead of returning wrong or missing neighbours
+    null_sides = {r["_side"] for r in both if r["_c"] is None}
+    if null_sides:
+        pts.unpersist()
+        qx.unpersist()
+        side = " and ".join(
+            name for s, name in ((0, "query"), (1, "point")) if s in null_sides
+        )
+        raise ValueError(f"knn_join: {side} rows with null lon/lat")
     hist = [r for r in both if r["_side"] == 1]
     grid = np.zeros((n_side, n_side), dtype=np.int64)
     _, hix, hiy = C.decode_cell(np.array([r["_c"] for r in hist], dtype=np.int64))
@@ -357,7 +375,7 @@ def knn_join(
     total = int(grid.sum())
 
     qcells = np.array(
-        sorted(r["_c"] for r in both if r["_side"] == 0 and r["_c"] is not None),
+        sorted(r["_c"] for r in both if r["_side"] == 0),
         dtype=np.int64,
     )
     _, qix, qiy = C.decode_cell(qcells)
@@ -394,50 +412,20 @@ def knn_join(
         """q_side carries (query_id, q_lon, q_lat, _qcell); cell_r maps
         query cell → Chebyshev radius.  Exact top-k per query via point
         replication + cogrouped numpy (see the operator docstring)."""
-        src2tgt: dict = {}
-        for c, r in cell_r.items():
-            for s in C.k_ring(int(c), int(r)):
-                src2tgt.setdefault(int(s), []).append(int(c))
-        items = sorted(src2tgt.items())
-        srcs = np.array([s for s, _ in items], dtype=np.int64)
-        lens = np.array([len(t) for _, t in items], dtype=np.int64)
-        offs = np.zeros(len(items) + 1, dtype=np.int64)
-        np.cumsum(lens, out=offs[1:])
-        tgts = np.array(
-            [t for _, ts in items for t in ts], dtype=np.int64
-        ) if items else np.empty(0, dtype=np.int64)
-        bc = spark.sparkContext.broadcast((srcs, offs, tgts))
-
-        def replicate(batches):
-            srcs_, offs_, tgts_ = bc.value
-            for pdf in batches:
-                if not len(pdf) or not len(srcs_):
-                    continue
-                pc = pdf["_pcell"].to_numpy(np.int64)
-                pos = np.searchsorted(srcs_, pc)
-                pos_c = np.minimum(pos, len(srcs_) - 1)
-                ok = srcs_[pos_c] == pc
-                start = offs_[pos_c]
-                cnt = np.where(ok, offs_[pos_c + 1] - start, 0)
-                n_out = int(cnt.sum())
-                if n_out == 0:
-                    continue
-                rep_row = np.repeat(np.arange(len(pc)), cnt)
-                cs = np.cumsum(cnt)
-                within = np.arange(n_out) - np.repeat(cs - cnt, cnt)
-                tidx = np.repeat(start, cnt) + within
-                yield pd.DataFrame(
-                    {
-                        "_tcell": tgts_[tidx],
-                        point_id: pdf[point_id].to_numpy()[rep_row],
-                        lon_col: pdf[lon_col].to_numpy(np.float64)[rep_row],
-                        lat_col: pdf[lat_col].to_numpy(np.float64)[rep_row],
-                    }
-                )
-
-        repl = pts.mapInPandas(
-            replicate,
-            schema=f"_tcell long, {point_id} {p_type}, {lon_col} double, {lat_col} double",
+        # (point cell → query cell) pairs: every cell of each query cell's
+        # priced ring; a broadcast equi-join replicates the points in the JVM
+        qc = np.fromiter(cell_r.keys(), dtype=np.int64, count=len(cell_r))
+        rings = [C.k_ring(int(c), int(r)) for c, r in cell_r.items()]
+        pairs = spark.createDataFrame(
+            pd.DataFrame(
+                {
+                    "_pcell": np.concatenate(rings) if rings else np.empty(0, dtype=np.int64),
+                    "_tcell": np.repeat(qc, [len(g) for g in rings]),
+                }
+            )
+        )
+        repl = pts.join(F.broadcast(pairs), "_pcell").select(
+            "_tcell", point_id, lon_col, lat_col
         )
 
         def group_fn(key, qg: pd.DataFrame, cg: pd.DataFrame) -> pd.DataFrame:

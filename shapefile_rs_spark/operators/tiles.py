@@ -3,21 +3,21 @@
 Tiles are equirectangular z/x/y (slippy-style: x across lon, y from +90 lat
 down).  Tile assignment of points is pure Catalyst arithmetic — stays inside
 whole-stage codegen, no Python in the hot path.  Tile↔polygon assignment
-reuses the PIP machinery with tile centers as the point side.
+reuses the PIP refine predicate with tile centers as the point side: each
+polygon-tile row carries its band's ring edges, so no polygon re-join and
+no Python worker decides containment.
 """
 
 from __future__ import annotations
 
-from typing import Iterator, List, Optional
+from typing import List, Optional
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
-from .spatial_join import pip_refine
+from .spatial_join import EDGES_TYPE, edge_list_array, refine_col
 
 
 def tile_x_col(lon, z: int):
@@ -53,54 +53,71 @@ def tile_aggregate(
     return assign_tiles(points, z, lon_col, lat_col).groupBy("tile_z", "tile_x", "tile_y").agg(*aggs)
 
 
-_TILE_SCHEMA_EXTRA = [
-    StructField("tile_z", IntegerType()),
-    StructField("tile_x", LongType()),
-    StructField("tile_y", LongType()),
-]
-
-
 def polygon_tiles(
     polygons: DataFrame, z: int, wkb_col: str = "wkb", id_cols: Optional[List[str]] = None
 ) -> DataFrame:
-    """Explode each polygon into the z/x/y tiles its bbox covers."""
+    """Explode each polygon into the z/x/y tiles its bbox covers.  Each tile
+    row carries in ``_edges`` the ring edges whose y-range meets the tile
+    row's latitude band and whose east end reaches the tile's west border
+    (both padded like :func:`..cells.classify_cover`) — all the even-odd
+    test of a point in that tile needs (:func:`refine_col`)."""
     id_cols = id_cols or [c for c in polygons.columns if c != wkb_col]
-    out_schema = StructType([polygons.schema[c] for c in id_cols] + _TILE_SCHEMA_EXTRA)
+    schema = ", ".join(
+        [f"`{c}` {polygons.schema[c].dataType.simpleString()}" for c in id_cols]
+        + ["tile_z int", "tile_x bigint", "tile_y bigint", f"_edges {EDGES_TYPE}"]
+    )
     n = 1 << z
+    tw, th = 360.0 / n, 180.0 / n
+    pad_x, pad_y = tw * 1e-9, th * 1e-9
 
-    def cover(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..geom.pip import rings_bbox
+    def cover(batches):
+        import pyarrow as pa
+
+        from ..geom.pip import cell_edges, ring_edges, rings_bbox
         from ..geom.wkb import wkb_rings
 
-        cols = [f.name for f in out_schema.fields]
-        for pdf in batches:
-            if not len(pdf):
-                yield pd.DataFrame(columns=cols)
+        for batch in batches:
+            # WKB parse per polygon; the tile-rectangle and edge expansion
+            # is numpy repeat/tile, not nested Python loops
+            rep, tx, ty, n_e, edges = [], [], [], [], []
+            for i, blob in enumerate(batch.column(wkb_col).to_pylist()):
+                rings = wkb_rings(blob)
+                xmin, ymin, xmax, ymax = np.asarray(rings_bbox(rings), dtype=np.float64)
+                tx0 = int(np.clip(np.floor((xmin + 180.0) / 360.0 * n), 0, n - 1))
+                tx1 = int(np.clip(np.floor((xmax + 180.0) / 360.0 * n), 0, n - 1))
+                ty0 = int(np.clip(np.floor((90.0 - ymax) / 180.0 * n), 0, n - 1))
+                ty1 = int(np.clip(np.floor((90.0 - ymin) / 180.0 * n), 0, n - 1))
+                # x-major, y inner; band b is tile row ty1 - b (latitude
+                # ascending), and each tile keeps the edges reaching its
+                # padded west border
+                nx, ny = tx1 - tx0 + 1, ty1 - ty0 + 1
+                x = np.repeat(np.arange(tx0, tx1 + 1, dtype=np.int64), ny)
+                y = np.tile(np.arange(ty0, ty1 + 1, dtype=np.int64), nx)
+                rows = np.arange(ty1, ty0 - 1, -1)
+                E = ring_edges(rings)
+                cnt, idx = cell_edges(
+                    E,
+                    90.0 - (rows + 1) * th - pad_y,
+                    90.0 - rows * th + pad_y,
+                    ty1 - y,
+                    np.where(x == 0, -np.inf, -180.0 + x * tw - pad_x),
+                )
+                rep.append(np.full(nx * ny, i, dtype=np.int64))
+                tx.append(x)
+                ty.append(y)
+                n_e.append(cnt)
+                edges.append(E[idx])
+            if not rep:
                 continue
-            # WKB parse per polygon; the tile-rectangle expansion is numpy
-            # meshgrid-style repeat/tile, not nested Python loops
-            bb = np.array(
-                [rings_bbox(wkb_rings(bytes(b))) for b in pdf[wkb_col]], dtype=np.float64
-            )
-            tx0 = np.clip(np.floor((bb[:, 0] + 180.0) / 360.0 * n), 0, n - 1).astype(np.int64)
-            tx1 = np.clip(np.floor((bb[:, 2] + 180.0) / 360.0 * n), 0, n - 1).astype(np.int64)
-            ty0 = np.clip(np.floor((90.0 - bb[:, 3]) / 180.0 * n), 0, n - 1).astype(np.int64)
-            ty1 = np.clip(np.floor((90.0 - bb[:, 1]) / 180.0 * n), 0, n - 1).astype(np.int64)
-            nx = tx1 - tx0 + 1
-            ny = ty1 - ty0 + 1
-            counts = nx * ny
-            total = int(counts.sum())
-            # per-tile local index within each polygon's nx×ny rectangle
-            csum = np.cumsum(counts) - counts
-            local = np.arange(total, dtype=np.int64) - np.repeat(csum, counts)
-            ny_rep = np.repeat(ny, counts)
-            out = {c: np.repeat(pdf[c].to_numpy(), counts) for c in id_cols}
-            out["tile_z"] = np.full(total, z, dtype=np.int32)
-            out["tile_x"] = np.repeat(tx0, counts) + local // ny_rep
-            out["tile_y"] = np.repeat(ty0, counts) + local % ny_rep
-            yield pd.DataFrame(out, columns=cols)
+            out = {c: batch.column(c).take(pa.array(np.concatenate(rep))) for c in id_cols}
+            tx_v = np.concatenate(tx)
+            out["tile_z"] = pa.array(np.full(len(tx_v), z, dtype=np.int32))
+            out["tile_x"] = pa.array(tx_v)
+            out["tile_y"] = pa.array(np.concatenate(ty))
+            out["_edges"] = edge_list_array(np.concatenate(n_e), np.concatenate(edges))
+            yield pa.RecordBatch.from_pydict(out)
 
-    return polygons.mapInPandas(cover, schema=out_schema)
+    return polygons.select(*id_cols, wkb_col).mapInArrow(cover, schema=schema)
 
 
 def tile_polygon_assignment(
@@ -111,17 +128,16 @@ def tile_polygon_assignment(
     center_rule: bool = True,
 ) -> DataFrame:
     """(tile_z, tile_x, tile_y, polygon_id): tiles whose CENTER lies inside
-    the polygon (center_rule) — deterministic, oracle-expressible assignment.
-    Without center_rule, returns the bbox covering (superset)."""
+    the polygon (center_rule) — deterministic, oracle-expressible assignment,
+    decided in the JVM by the even-odd predicate over each tile row's band
+    edges.  Without center_rule, returns the bbox covering (superset)."""
     tiles = polygon_tiles(polygons, z, wkb_col=wkb_col, id_cols=[polygon_key])
     if not center_rule:
-        return tiles
+        return tiles.drop("_edges")
     n = float(1 << z)
-    with_centers = tiles.withColumn(
-        "_clon", (F.col("tile_x") + F.lit(0.5)) / F.lit(n) * F.lit(360.0) - F.lit(180.0)
-    ).withColumn("_clat", F.lit(90.0) - (F.col("tile_y") + F.lit(0.5)) / F.lit(n) * F.lit(180.0))
-    joined = with_centers.join(F.broadcast(polygons.select(polygon_key, wkb_col)), polygon_key)
-    inside = joined.filter(pip_refine(F.col(wkb_col), F.col("_clon"), F.col("_clat")))
+    clon = (F.col("tile_x") + F.lit(0.5)) / F.lit(n) * F.lit(360.0) - F.lit(180.0)
+    clat = F.lit(90.0) - (F.col("tile_y") + F.lit(0.5)) / F.lit(n) * F.lit(180.0)
+    inside = tiles.filter(refine_col(clon, clat, F.col("_edges")))
     return inside.select(polygon_key, "tile_z", "tile_x", "tile_y")
 
 

@@ -144,9 +144,10 @@ def test_tile_xy_matches_sql_formula():
 def test_classify_cover_exact_partition():
     """classify_cover's three-way split is exact: FULL cells are entirely
     interior (dense sampling), dropped bbox cells contain no interior point,
-    and boundary cells are exactly where ring edges pass."""
+    and boundary cells are exactly where ring edges pass — each carrying
+    the edges that decide its points."""
     import numpy as np
-    from shapefile_rs_spark.geom.pip import points_in_rings, rings_bbox
+    from shapefile_rs_spark.geom.pip import crossings_matrix, points_in_rings, rings_bbox
 
     t = np.linspace(0, 2 * np.pi, 48, endpoint=False)
     outer = np.column_stack([(9 + 2 * np.sin(4 * t)) * np.cos(t) + 15,
@@ -158,16 +159,39 @@ def test_classify_cover_exact_partition():
     rings = [outer, hole]
 
     res = 9
-    cells, full = C.classify_cover(rings, res)
+    cells, full, n_edges, edges = C.classify_cover(rings, res)
     assert full.sum() > 0 and (~full).sum() > 0
+    # full cells carry no edges; boundary cells carry their band's edges
+    assert (n_edges[full] == 0).all() and (n_edges[~full] > 0).all()
+    assert n_edges.sum() == len(edges)
+    # the west trim: along a grid row, cells farther east keep fewer edges
+    _, ix, iy = C.decode_cell(cells)
+    drops = 0
+    for row in np.unique(iy):
+        sel = (iy == row) & ~full
+        cnt = n_edges[sel][np.argsort(ix[sel])]
+        assert (np.diff(cnt) <= 0).all()
+        drops += int(cnt[0] > cnt[-1])
+    assert drops > 0
+    start = np.cumsum(n_edges) - n_edges
     kept = set(int(c) for c in cells)
-    for cell, f in zip(cells, full):
+    for i, (cell, f) in enumerate(zip(cells, full)):
         x0, y0, x1, y1 = C.cell_bounds(int(cell))
         gx, gy = np.meshgrid(np.linspace(x0 + 1e-9, x1 - 1e-9, 8),
                              np.linspace(y0 + 1e-9, y1 - 1e-9, 8))
         ins = points_in_rings(gx.ravel(), gy.ravel(), rings)
         if f:
             assert ins.all()  # FULL ⇒ every sampled point inside
+            continue
+        # a boundary cell's own edges decide every point that lands in it,
+        # its borders and one ulp either side included
+        xs = np.concatenate([gx.ravel(), np.nextafter(x0, -np.inf), x0, np.nextafter(x0, np.inf),
+                             np.full(3, (x0 + x1) / 2)], axis=None)
+        ys = np.concatenate([gy.ravel(), np.full(3, (y0 + y1) / 2),
+                             np.nextafter(y0, -np.inf), y0, np.nextafter(y1, -np.inf)], axis=None)
+        home = C.cell_id(xs, ys, res) == cell
+        own = crossings_matrix(xs, ys, edges[start[i] : start[i] + n_edges[i]]) % 2 == 1
+        assert (own == points_in_rings(xs, ys, rings))[home].all()
     for cell in (int(c) for c in C.cover_bbox(*rings_bbox(rings), res)):
         if cell in kept:
             continue
@@ -219,5 +243,5 @@ def test_classify_cover_degenerate_rings_empty():
 
     from shapefile_rs_spark import cells as C
 
-    cells, full = C.classify_cover([np.array([[1.0, 2.0]])], res=6)
-    assert len(cells) == 0 and len(full) == 0
+    cells, full, n_edges, edges = C.classify_cover([np.array([[1.0, 2.0]])], res=6)
+    assert len(cells) == 0 and len(full) == 0 and len(n_edges) == 0 and len(edges) == 0

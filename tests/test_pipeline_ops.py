@@ -482,6 +482,31 @@ def test_knn_join_fewer_points_than_k(spark):
     assert got == want and len(got) == 6
 
 
+def test_knn_join_rejects_null_coordinates(spark):
+    """A query (or point) row with a null lon/lat has no cell and would
+    silently vanish from the result — knn_join raises instead."""
+    import pytest
+
+    from shapefile_rs_spark.operators.knn import knn_join
+
+    pts = spark.range(50).select(
+        F.col("id").alias("point_id"),
+        (F.col("id") * 0.5).alias("lon"),
+        (F.col("id") * 0.25).alias("lat"),
+    )
+    qs = spark.sql(
+        "SELECT * FROM VALUES (1, CAST(1.0 AS DOUBLE), CAST(1.0 AS DOUBLE)), "
+        "(2, CAST(NULL AS DOUBLE), CAST(2.0 AS DOUBLE)) AS t(query_id, q_lon, q_lat)"
+    )
+    with pytest.raises(ValueError, match="query rows with null lon/lat"):
+        knn_join(pts, qs, k=3, res=4)
+    bad_pts = pts.withColumn("lat", F.when(F.col("point_id") == 7, None).otherwise(F.col("lat")))
+    with pytest.raises(ValueError, match="point rows with null lon/lat"):
+        knn_join(bad_pts, qs.filter(F.col("q_lon").isNotNull()), k=3, res=4)
+    # the clean inputs still run
+    assert knn_join(pts, qs.filter(F.col("q_lon").isNotNull()), k=3, res=4).count() == 3
+
+
 def test_dedup_clusters_string_ids_distributed(spark):
     """Review regression: the distributed path must work for string ids
     (the natural URL-id case) and raise loudly on non-convergence."""

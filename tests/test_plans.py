@@ -51,6 +51,66 @@ def test_pip_broadcast_phase_is_broadcast(spark, sf_dir):
     plan = _plan(joined)
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
+    assert "EvalPython" not in plan  # the refine is a Catalyst predicate
+
+
+def test_pip_joins_refine_without_python(spark, sf_dir, tmp_path):
+    """Every PIP refine runs in the JVM — no BatchEvalPython/ArrowEvalPython
+    node in the flagship broadcast join (synth → geotag → join), the
+    checkpointed pre-indexed fixed-res join, the salted shuffle join, or
+    the tile-polygon assignment; the driver-side covering is an Arrow
+    LocalTableScan, not an RDD scan."""
+    from shapefile_rs_spark import demo
+    from shapefile_rs_spark.operators.spatial_join import point_in_polygon_join, with_cells
+    from shapefile_rs_spark.operators.tiles import tile_polygon_assignment
+    from shapefile_rs_spark.pages import geotag_pages, synth_pages_from_ids
+
+    polys = demo.oracle_polygons_df(spark)
+    ids = spark.range(1000).withColumnRenamed("id", "page_id")
+    pages = geotag_pages(synth_pages_from_ids(ids)).select("doc_id", "lon", "lat")
+    kw = dict(point_cols=["doc_id", "lon", "lat"], polygon_cols=["polygon_id"])
+    plans = {
+        "geo_tiles": _plan(point_in_polygon_join(pages, polys, broadcast_polygons=True, **kw)),
+        "pre_indexed": _plan(
+            point_in_polygon_join(
+                with_cells(pages, [8]), polys, fixed_res=8, pre_indexed=True, **kw
+            )
+        ),
+        "salted": _plan(
+            point_in_polygon_join(
+                pages, polys, broadcast_polygons=False, salt_factor=4, hot_cell_threshold=10, **kw
+            )
+        ),
+        "tile_assignment": _plan(tile_polygon_assignment(polys, z=6)),
+    }
+    for name, plan in plans.items():
+        assert "EvalPython" not in plan, name
+    for name in ("geo_tiles", "pre_indexed"):
+        assert "LocalTableScan" in plans[name] and "Scan ExistingRDD" not in plans[name]
+
+
+def test_stream_pip_tiles_refines_without_python(spark, sf_dir, tmp_path):
+    """The streaming PIP+tile query's executed micro-batch plan carries no
+    Python evaluation node: it is the batch broadcast join, refine included."""
+    from shapefile_rs_spark import demo
+    from shapefile_rs_spark.pages import pages_from_documents
+    from shapefile_rs_spark.streaming.geostream import read_page_stream, stream_pip_tiles
+
+    pdir = str(tmp_path / "pages_pq")
+    pages_from_documents(spark, sf_dir).write.parquet(pdir)
+    sdf = stream_pip_tiles(read_page_stream(spark, pdir), demo.oracle_polygons_df(spark), z=6)
+    q = (
+        sdf.writeStream.format("memory")
+        .queryName("pip_stream_plan_test")
+        .outputMode("complete")
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    plan = q._jsq.explainInternal(True)
+    assert "BroadcastHashJoin" in plan
+    assert "EvalPython" not in plan
 
 
 def test_page_synthesis_stays_in_codegen(spark, sf_dir):

@@ -399,17 +399,17 @@ def test_convex_hull_per_group(spark):
 
 
 def test_interior_cells_bypass_refine_udf(spark):
-    """Fully-interior covering cells skip the ray-cast: their candidates'
-    wkb is NULLED before the refine UDF (a parse attempt would raise), and
-    pip_refine_full passes them through.  Exactness pinned against the
+    """Fully-interior covering cells skip the ray-cast: they carry no edges
+    (``_edges`` empty) and ``cell_full`` alone admits their candidates;
+    boundary cells carry their band's edges.  Exactness pinned against the
     nested-loop oracle on a polygon big enough to have interior cells."""
     import numpy as np
     from shapefile_rs_spark import cells as C
     from shapefile_rs_spark.geom.pip import nested_loop_pip_oracle
-    from shapefile_rs_spark.geom.wkb import multipolygon_wkb, wkb_rings
+    from shapefile_rs_spark.geom.wkb import multipolygon_wkb
     from shapefile_rs_spark.operators.spatial_join import (
         point_in_polygon_join,
-        pip_refine_full,
+        polygon_covering,
     )
 
     ring = np.array(
@@ -417,7 +417,7 @@ def test_interior_cells_bypass_refine_udf(spark):
     )
     wkb = multipolygon_wkb([[ring]])
     res = 8  # cell ~1.4° → plenty of interior cells inside a 30×20 box
-    cells, full = C.classify_cover([ring], res)
+    cells, full, _, _ = C.classify_cover([ring], res)
     assert full.sum() > 0
 
     rng = np.random.default_rng(5)
@@ -440,18 +440,144 @@ def test_interior_cells_bypass_refine_udf(spark):
     want = {(i, j + 1) for i, j in nested_loop_pip_oracle(pts, [[ring]])}
     assert got == want and len(want) > 100
 
-    # the bypass contract itself: null wkb + full=True returns True without
-    # ever parsing (parsing None would raise); full=False rows still refine
-    import pandas as pd
-
-    inner = pip_refine_full.func
-    out = inner(
-        pd.Series([None, wkb], dtype=object),
-        pd.Series([1.0, 100.0]),
-        pd.Series([1.0, 100.0]),
-        pd.Series([True, False]),
+    # the bypass contract itself: full cells carry empty _edges, boundary
+    # cells a non-empty band, and the Spark covering is classify_cover's
+    cov = polygon_covering(poly_df, fixed_res=res).collect()
+    assert {r["cell_id"]: r["cell_full"] for r in cov} == dict(
+        zip(cells.tolist(), full.tolist())
     )
-    assert list(out) == [True, False]
+    assert all((len(r["_edges"]) == 0) == r["cell_full"] for r in cov)
+
+
+def test_refine_predicate_bit_identical_to_numpy(spark):
+    """The in-JVM even-odd refine gives exactly geom.pip.points_in_rings'
+    booleans — directly over every ring edge, and through the join, where
+    each candidate sees only its covering cell's band edges — on points on
+    cell borders and one ulp either side, on vertices, on horizontal edges
+    (ANSI on: a division by zero would raise), inside holes and
+    multi-polygon parts, beyond ±90° in the clamped grid rows, and NaN —
+    and tile_polygon_assignment's tile centers likewise."""
+    import numpy as np
+    import pyarrow as pa
+
+    from shapefile_rs_spark import cells as C
+    from shapefile_rs_spark.geom.pip import points_in_rings, ring_edges, rings_bbox
+    from shapefile_rs_spark.geom.wkb import multipolygon_wkb, wkb_rings
+    from shapefile_rs_spark.operators.spatial_join import (
+        edge_list_array,
+        point_in_polygon_join,
+        refine_col,
+    )
+    from shapefile_rs_spark.operators.tiles import tile_polygon_assignment
+
+    def closed(xy):
+        xy = np.asarray(xy, dtype=np.float64)
+        return np.vstack([xy, xy[:1]])
+
+    sq = closed([[-0.005, -0.005], [10.005, -0.005], [10.005, 10.005], [-0.005, 10.005]])
+    hole = closed([[3.995, 3.995], [6.005, 3.995], [6.005, 6.005], [3.995, 6.005]])
+    tri = closed([[20.005, 0.005], [30.005, 5.005], [20.005, 10.005]])
+    north = closed([[-40.0, 80.0], [40.0, 80.0], [40.0, 100.0], [0.0, 92.0], [-40.0, 100.0]])
+    south = closed([[100.0, -80.0], [140.0, -80.0], [140.0, -100.0], [100.0, -100.0]])
+    polys = [[[sq, hole], [tri]], [[north]], [[south]], [[closed([[0.1, 0.1], [0.2, 0.3], [0.3, 0.1]])]]]
+    blobs = [bytes(multipolygon_wkb(p)) for p in polys]
+    rings = [wkb_rings(b) for b in blobs]
+
+    rng = np.random.default_rng(17)
+    up = lambda v: np.nextafter(v, np.inf)  # noqa: E731
+    dn = lambda v: np.nextafter(v, -np.inf)  # noqa: E731
+    lons, lats = [], []
+
+    def add(x, y):
+        x, y = np.broadcast_arrays(np.asarray(x, np.float64), np.asarray(y, np.float64))
+        lons.append(x.ravel())
+        lats.append(y.ravel())
+
+    for rs in rings:
+        xmin, ymin, xmax, ymax = rings_bbox(rs)
+        V = np.vstack(rs)
+        for fx in (lambda v: v, up, dn):  # vertices and one ulp around them
+            for fy in (lambda v: v, up, dn):
+                add(fx(V[:, 0]), fy(V[:, 1]))
+        for res in sorted({3, C.adaptive_cover_res(xmin, ymin, xmax, ymax, 256, 12)}):
+            n = 1 << res
+            ky = np.arange(np.floor((ymin + 90) / 180 * n), np.ceil((ymax + 90) / 180 * n) + 1)
+            kx = np.arange(np.floor((xmin + 180) / 360 * n), np.ceil((xmax + 180) / 360 * n) + 1)
+            by, bx = -90.0 + ky * (180.0 / n), -180.0 + kx * (360.0 / n)
+            for f in (lambda v: v, up, dn):  # cell borders and one ulp around
+                add(rng.uniform(xmin, xmax, len(by)), f(by))
+                add(f(bx), rng.uniform(ymin, ymax, len(bx)))
+        add(rng.uniform(xmin - 1, xmax + 1, 1500), rng.uniform(ymin - 1, ymax + 1, 1500))
+        E = ring_edges(rs)
+        flat = E[E[:, 1] == E[:, 3]]  # points ON horizontal edges' lines
+        for x1, y, x2, _ in flat:
+            add(np.linspace(min(x1, x2) - 1, max(x1, x2) + 1, 41), y)
+    add([0.0, 20.0, 30.0, 0.0, 120.0, 120.0], [95.0, 95.0, 99.0, 123.0, -95.0, -130.0])
+    add([np.nan, 5.0, np.nan, 20.0], [5.0, np.nan, np.nan, 95.0])
+    px, py = np.concatenate(lons), np.concatenate(lats)
+    want = np.stack([points_in_rings(px, py, rs) for rs in rings], axis=1)
+    assert want.any(axis=0).all() and (~want).any(axis=0).all()
+    assert np.isnan(px).any() and (py > 90).any() and (py < -90).any()
+
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        pts = spark.createDataFrame(  # Arrow keeps NaN a NaN (pandas would null it)
+            pa.table({"point_id": np.arange(len(px)), "lon": px, "lat": py})
+        )
+        E_all = [ring_edges(rs) for rs in rings]
+        all_edges = spark.createDataFrame(
+            pa.table(
+                {
+                    "polygon_id": np.arange(len(rings)),
+                    "_edges": edge_list_array(
+                        np.array([len(e) for e in E_all]), np.concatenate(E_all)
+                    ),
+                }
+            )
+        )
+        direct = np.zeros_like(want)
+        for r in (
+            pts.crossJoin(F.broadcast(all_edges))
+            .filter(refine_col(F.col("lon"), F.col("lat"), F.col("_edges")))
+            .select("point_id", "polygon_id")
+            .collect()
+        ):
+            direct[r[0], r[1]] = True
+        assert (direct == want).all()
+
+        poly_df = spark.createDataFrame(
+            pa.table({"polygon_id": np.arange(len(blobs)), "wkb": pa.array(blobs, pa.binary())})
+        )
+        for kw in ({}, {"fixed_res": 3}, {"broadcast_polygons": False}):
+            joined = np.zeros_like(want)
+            for r in point_in_polygon_join(
+                pts, poly_df, point_cols=["point_id"], polygon_cols=["polygon_id"], **kw
+            ).collect():
+                joined[r[0], r[1]] = True
+            assert (joined == want).all(), kw
+
+        # tile centers are points too: each polygon-tile row decides its
+        # center over the edges polygon_tiles gave it
+        z = 7
+        n = 1 << z
+        tx, ty = (g.ravel() for g in np.meshgrid(np.arange(n), np.arange(n)))
+        clon = (tx + 0.5) / n * 360.0 - 180.0
+        clat = 90.0 - (ty + 0.5) / n * 180.0
+        want_t = {
+            (i, int(x), int(y))
+            for i, rs in enumerate(rings)
+            for x, y in zip(*(v[points_in_rings(clon, clat, rs)] for v in (tx, ty)))
+        }
+        got_t = {
+            tuple(r)
+            for r in tile_polygon_assignment(poly_df, z)
+            .select("polygon_id", "tile_x", "tile_y")
+            .collect()
+        }
+        assert got_t == want_t and len(want_t) > 50
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
 
 
 def test_memo_attrs_through_source(spark, tmp_path):
