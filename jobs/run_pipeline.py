@@ -15,7 +15,9 @@ is parquet under --out, which would be an Iceberg warehouse path in
 production — see lineage.py for the adapter contract).
 
 Prints one JSON line: per-stage rows/wall-times, lineage summary, and
-pages/sec for the compute stages.
+pages/sec for the compute stages.  A stage's ``partitions`` is the number
+of parquet files its write produced (one lineage row per writer task's
+``part-NNNNN`` file), not the partition count of a later read.
 """
 
 from __future__ import annotations

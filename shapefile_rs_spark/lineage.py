@@ -7,30 +7,50 @@ so a real catalog drops in by reimplementing ``_commit``/``_load``).
 
 Layout under ``root``::
 
-    _manifest.json                 # snapshot log: append-only list of commits
+    _manifest.json                 # snapshot log: append-only list of commits,
+                                   #   plus one entry per stage (path, rows,
+                                   #   partitions, wall_ms, schema)
     stages/<stage>/data/*.parquet  # committed stage output
     stages/<stage>/lineage.json    # per-partition rows:
                                    #   (stage, partition_id, output_rows, wall_ms)
 
-Commit protocol: stage data is written to a staging dir, lineage is gathered
-with a single pass (``spark_partition_id`` group-count over the written
-files), then the manifest is atomically replaced (POSIX rename) — a killed
-job never exposes a half-written stage, and a rerun resumes from the last
-manifest (completed stages load from their committed parquet; nothing is
-recomputed).
+Commit protocol: stage data is written to a staging dir and moved into
+place; lineage comes from the written files' parquet footers (row count per
+file, summed per writer task's ``part-NNNNN`` number — no read-back pass),
+then the manifest is atomically replaced (POSIX rename) — a killed job never
+exposes a half-written stage, and a rerun resumes from the last manifest
+(completed stages load from their committed parquet; nothing is
+recomputed).  The stage entry records the stage schema (``df.schema`` as
+JSON), so :meth:`CheckpointedPipeline.read_stage` opens committed data
+without a schema-inference job.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import time
 import uuid
-from typing import Callable, List, Optional
+from typing import Callable, Dict, List, Optional
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession
+from pyspark.sql.types import StructType
+
+_PART = re.compile(r"part-(\d+)")
+
+
+def _footer_rows(files: List[str]) -> Dict[str, int]:
+    """Row count of each parquet file, read from its footer on the driver."""
+    return {f: pq.read_metadata(f).num_rows for f in files}
+
+
+def _columns(schema: StructType) -> List[tuple]:
+    """``(name, type)`` per column; a type's simple string carries no
+    nullability, and parquet reads resolve columns by name, not position."""
+    return sorted((f.name, f.dataType.simpleString()) for f in schema.fields)
 
 
 class CheckpointedPipeline:
@@ -103,7 +123,23 @@ class CheckpointedPipeline:
                 f"lists {len(missing)} missing file(s) (a later rerun/overwrite "
                 f"removed them), e.g. {missing[0]!r}"
             )
-        return self.spark.read.parquet(*files)
+        return self._reader(manifest, stage).parquet(*files)
+
+    def _reader(self, manifest: dict, stage: str) -> DataFrameReader:
+        """A parquet reader carrying the stage's manifest schema; stages
+        committed before the manifest recorded schemas fall back to
+        inference."""
+        schema = manifest["stages"].get(stage, {}).get("schema")
+        reader = self.spark.read
+        return reader.schema(StructType.fromJson(schema)) if schema else reader
+
+    def read_stage(self, stage: str) -> DataFrame:
+        """Open a committed stage: one root path read with the manifest's
+        schema, so no schema-inference job and no parallel-listing job."""
+        manifest = self._load()
+        if stage not in manifest["stages"]:
+            raise KeyError(f"stage {stage!r} is not committed")
+        return self._reader(manifest, stage).parquet(self.stage_path(stage))
 
     def snapshots(self, stage: Optional[str] = None) -> List[dict]:
         return [
@@ -131,17 +167,13 @@ class CheckpointedPipeline:
 
     # -- stage execution ----------------------------------------------------
 
-    def run_stage(
-        self,
-        stage: str,
-        build: Callable[[], DataFrame],
-        partition_by: Optional[List[str]] = None,
-    ) -> DataFrame:
+    def run_stage(self, stage: str, build: Callable[[], DataFrame]) -> DataFrame:
         """Compute-or-load a stage.  On compute: write parquet, record
-        per-partition lineage, commit atomically.  On resume: read the
-        committed parquet without recomputation."""
+        per-partition lineage from the written files' footers, commit
+        atomically.  On resume: read the committed parquet without
+        recomputation."""
         if self.completed(stage):
-            return self.spark.read.parquet(self.stage_path(stage))
+            return self.read_stage(stage)
 
         data_dir = self.stage_path(stage)
         # crash-orphan GC (Iceberg's orphan-file cleanup analog): a job
@@ -160,45 +192,38 @@ class CheckpointedPipeline:
         t0 = time.time()
         df = build()
         staging = data_dir + f".staging.{uuid.uuid4().hex}"
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(staging)
+        df.write.mode("overwrite").parquet(staging)
         wall_ms = int((time.time() - t0) * 1000)
 
-        committed = self.spark.read.parquet(staging)
-        per_part = (
-            committed.withColumn("_pid", F.spark_partition_id())
-            .groupBy("_pid")
-            .count()
-            .collect()
-        )
-        lineage_rows = [
-            {
-                "stage": stage,
-                "partition_id": int(r["_pid"]),
-                "output_rows": int(r["count"]),
-                "wall_ms": wall_ms,
-            }
-            for r in sorted(per_part, key=lambda r: r["_pid"])
-        ]
         os.makedirs(os.path.dirname(data_dir), exist_ok=True)
         if os.path.exists(data_dir):
             shutil.rmtree(data_dir)
         os.replace(staging, data_dir)
+        files = self._stage_files(stage)
+        # one writer task writes part-NNNNN files (several only under
+        # maxRecordsPerFile); its partition's rows are their footer sum
+        per_part: Dict[int, int] = {}
+        for f, n in _footer_rows(files).items():
+            pid = int(_PART.search(os.path.basename(f)).group(1))
+            per_part[pid] = per_part.get(pid, 0) + n
+        lineage_rows = [
+            {"stage": stage, "partition_id": pid, "output_rows": n, "wall_ms": wall_ms}
+            for pid, n in sorted(per_part.items())
+        ]
         with open(os.path.join(self.root, "stages", stage, "lineage.json"), "w") as fh:
             json.dump(lineage_rows, fh, indent=1)
         self._commit(
             stage,
             {
                 "path": data_dir,
-                "rows": int(sum(r["output_rows"] for r in lineage_rows)),
+                "rows": sum(per_part.values()),
                 "partitions": len(lineage_rows),
                 "wall_ms": wall_ms,
+                "schema": df.schema.jsonValue(),
             },
-            files=self._stage_files(stage),
+            files=files,
         )
-        return self.spark.read.parquet(data_dir)
+        return self.read_stage(stage)
 
     def append_delta(
         self,
@@ -260,13 +285,12 @@ class CheckpointedPipeline:
                 break
         on_disk = set(self._stage_files(stage))
         if on_disk - listed:
-            rows = self.spark.read.parquet(data_dir).count()
             self._commit(
                 stage,
                 {
-                    "path": data_dir,
-                    "rows": rows,
-                    # rows were recounted from disk but the writing job's
+                    **manifest["stages"][stage],
+                    "rows": sum(_footer_rows(list(on_disk)).values()),
+                    # rows were recounted from the footers but the writing job's
                     # partitioning is gone — recording the PREVIOUS entry's
                     # count here would be stale (the delta files were
                     # added); unknown is the only honest value
@@ -275,33 +299,32 @@ class CheckpointedPipeline:
                 },
                 files=sorted(on_disk),
             )
-        existing = self.spark.read.parquet(self.stage_path(stage))
+        existing = self.read_stage(stage)
+        if _columns(new_df.schema) != _columns(existing.schema):
+            # parquet resolves columns by name against the stage schema, so
+            # a mismatched delta would otherwise be read back silently wrong
+            raise ValueError(
+                f"append_delta to stage {stage!r}: batch columns "
+                f"{new_df.schema.simpleString()} do not match the committed "
+                f"{existing.schema.simpleString()}"
+            )
         delta = new_df.join(existing.select(*key_cols), on=key_cols, how="left_anti")
         if delta.isEmpty():
             return existing
         t0 = time.time()
-        staging = self.stage_path(stage) + f".delta.{uuid.uuid4().hex}"
+        staging = data_dir + f".delta.{uuid.uuid4().hex}"
         delta.write.mode("overwrite").parquet(staging)
-        n_new = self.spark.read.parquet(staging).count()
+        parts = [os.path.join(staging, f) for f in os.listdir(staging) if f.endswith(".parquet")]
+        n_new = sum(_footer_rows(parts).values())
         # append the delta files into the stage dir (Iceberg: new manifest
         # referencing old + new data files; here: move files in, re-commit)
-        data_dir = self.stage_path(stage)
-        for fname in os.listdir(staging):
-            if fname.endswith(".parquet"):
-                os.replace(
-                    os.path.join(staging, fname),
-                    os.path.join(data_dir, f"delta-{uuid.uuid4().hex}-{fname}"),
-                )
+        for f in parts:
+            os.replace(f, os.path.join(data_dir, f"delta-{uuid.uuid4().hex}-{os.path.basename(f)}"))
         shutil.rmtree(staging)
         prev = self._load()["stages"][stage]
         self._commit(
             stage,
-            {
-                "path": data_dir,
-                "rows": prev["rows"] + n_new,
-                "partitions": prev["partitions"],
-                "wall_ms": int((time.time() - t0) * 1000),
-            },
+            {**prev, "rows": prev["rows"] + n_new, "wall_ms": int((time.time() - t0) * 1000)},
             files=self._stage_files(stage),
         )
-        return self.spark.read.parquet(data_dir)
+        return self.read_stage(stage)

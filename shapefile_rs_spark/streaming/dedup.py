@@ -144,9 +144,9 @@ def maintain_signature_stage(
     pipe = CheckpointedPipeline(docs_stream.sparkSession, pipeline_root)
     if not pipe.completed(stage):
         return None  # zero non-empty batches and no prior stage
-    sig_frame = pipe.spark.read.parquet(pipe.stage_path(stage))
+    sig_frame = pipe.read_stage(stage)
     if band_stage:
-        return sig_frame, pipe.spark.read.parquet(pipe.stage_path(band_stage))
+        return sig_frame, pipe.read_stage(band_stage)
     return sig_frame
 
 
@@ -208,7 +208,7 @@ def maintain_para_registry(
     pipe = CheckpointedPipeline(docs_stream.sparkSession, pipeline_root)
     if not pipe.completed(stage):
         return None  # zero non-empty batches and no prior stage
-    return pipe.spark.read.parquet(pipe.stage_path(stage))
+    return pipe.read_stage(stage)
 
 
 def maintain_line_registry(
@@ -271,7 +271,7 @@ def maintain_line_registry(
     if not pipe.completed(stage):
         return None  # zero non-empty batches and no prior stage
     return (
-        pipe.spark.read.parquet(pipe.stage_path(stage))
+        pipe.read_stage(stage)
         .groupBy("line")
         .agg(F.count(F.lit(1)).alias("n_docs"))
     )
@@ -336,7 +336,7 @@ def maintain_dsir_registry(
     if not pipe.completed(stage):
         return None  # zero non-empty batches and no prior stage
     return (
-        pipe.spark.read.parquet(pipe.stage_path(stage))
+        pipe.read_stage(stage)
         .groupBy("f")
         .agg(F.sum("t").alias("t"), F.sum("q").alias("q"))
     )
@@ -401,12 +401,12 @@ def maintain_lm_registry(
     if not (pipe.completed(uni_stage) and pipe.completed(big_stage)):
         return None  # zero non-empty batches and no prior stages
     uni = (
-        pipe.spark.read.parquet(pipe.stage_path(uni_stage))
+        pipe.read_stage(uni_stage)
         .groupBy("w")
         .agg(F.sum("c").alias("c_uni"))
     )
     big = (
-        pipe.spark.read.parquet(pipe.stage_path(big_stage))
+        pipe.read_stage(big_stage)
         .groupBy("w1", "w2")
         .agg(F.sum("c").alias("c_big"))
     )

@@ -385,3 +385,118 @@ def test_read_snapshot_legacy_and_overwritten_manifests(spark, tmp_path):
     with pytest.raises(ValueError, match="missing file"):
         pipe.read_snapshot("s", old_snap)
     assert pipe.read_snapshot("s").count() == 5
+
+
+def _group_jobs(spark, group, fn):
+    """Run ``fn`` under job group ``group``; return its result and the ids
+    of every Spark job it launched (listener bus drained first, so a job
+    that started is always counted)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup("", "")
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_commit_resume_and_snapshot_read_are_job_free(spark, tmp_path):
+    """Committing a stage launches only its write; lineage comes from the
+    written footers (no read-back, no group-count), and reopening a
+    committed stage — resume or time travel — launches no job at all
+    before an action (the manifest schema replaces inference)."""
+    root = str(tmp_path)
+    pipe = CheckpointedPipeline(spark, root)
+    _, jobs = _group_jobs(
+        spark, "lineage-commit", lambda: pipe.run_stage("n", lambda: spark.range(0, 1000, 1, 4))
+    )
+    assert len(jobs) == 1, f"run_stage launched {len(jobs)} jobs, want only the write"
+
+    def must_not_run():
+        raise AssertionError("committed stage recomputed on resume")
+
+    resumed, jobs = _group_jobs(
+        spark,
+        "lineage-resume",
+        lambda: CheckpointedPipeline(spark, root).run_stage("n", must_not_run),
+    )
+    assert jobs == []
+    snap, jobs = _group_jobs(spark, "lineage-snapshot", lambda: pipe.read_snapshot("n"))
+    assert jobs == []
+    assert resumed.count() == snap.count() == 1000
+
+
+def test_lineage_from_footers_is_exact(spark, tmp_path):
+    """Lineage rows are the writer tasks' footer row counts: four range
+    partitions give partition ids 0..3 with 250 rows each, summing to the
+    manifest rows.  An all-empty stage commits zero rows and reopens with
+    its schema."""
+    pipe = CheckpointedPipeline(spark, str(tmp_path))
+    pipe.run_stage("n", lambda: spark.range(0, 1000, 1, 4))
+    rows = pipe.lineage("n")
+    assert [(r["partition_id"], r["output_rows"]) for r in rows] == [(p, 250) for p in range(4)]
+    entry = pipe._load()["stages"]["n"]
+    assert entry["rows"] == sum(r["output_rows"] for r in rows) == 1000
+    assert entry["partitions"] == 4
+
+    empty = spark.range(0, 1000, 1, 4).withColumn("v", F.col("id") * 2).filter("id < 0")
+    pipe.run_stage("empty", lambda: empty)
+    assert pipe._load()["stages"]["empty"]["rows"] == 0
+    assert sum(r["output_rows"] for r in pipe.lineage("empty")) == 0
+    reopened = CheckpointedPipeline(spark, str(tmp_path)).read_stage("empty")
+    assert reopened.columns == ["id", "v"] and reopened.count() == 0
+
+
+def test_read_stage_schema_matches_inference(spark, tmp_path):
+    """The manifest schema opens a stage with exactly the schema parquet
+    inference would give — nested, decimal, timestamp_ntz and a
+    non-nullable column included — and a legacy manifest without a
+    schema key still opens (by inference)."""
+    df = spark.range(0, 10, 1, 2).select(
+        F.col("id"),
+        F.array(F.struct(F.col("id").alias("a"), F.lit("x").alias("b"))).alias("arr"),
+        F.create_map(F.lit("k"), F.col("id")).alias("m"),
+        F.col("id").cast("decimal(12,3)").alias("dec"),
+        F.lit("2024-01-02 03:04:05").cast("timestamp_ntz").alias("ts"),
+    )
+    assert not df.schema["id"].nullable  # the frame really has a non-nullable column
+    root = str(tmp_path)
+    pipe = CheckpointedPipeline(spark, root)
+    pipe.run_stage("wide", lambda: df)
+    inferred = spark.read.parquet(pipe.stage_path("wide"))
+    got = pipe.read_stage("wide")
+    assert got.schema == inferred.schema
+    assert sorted(got.collect()) == sorted(inferred.collect())
+
+    with open(pipe.manifest_path) as fh:
+        manifest = json.load(fh)
+    del manifest["stages"]["wide"]["schema"]
+    with open(pipe.manifest_path, "w") as fh:
+        json.dump(manifest, fh)
+    legacy = CheckpointedPipeline(spark, root).read_stage("wide")
+    assert legacy.schema == inferred.schema and legacy.count() == 10
+
+
+def test_append_delta_rejects_mismatched_schema(spark, tmp_path):
+    """A batch whose column names or types differ from the committed
+    stage schema fails loudly instead of being read back wrong;
+    nullability alone is not a mismatch."""
+    pipe = CheckpointedPipeline(spark, str(tmp_path))
+    pipe.run_stage("s", lambda: spark.range(10).withColumn("v", F.col("id").cast("string")))
+    retyped = spark.range(10, 15).withColumn("v", F.col("id").cast("int"))
+    with pytest.raises(ValueError, match="do not match"):
+        pipe.append_delta("s", retyped, ["id"])
+    renamed = spark.range(10, 15).withColumn("w", F.col("id").cast("string"))
+    with pytest.raises(ValueError, match="do not match"):
+        pipe.append_delta("s", renamed, ["id"])
+    assert pipe.read_stage("s").count() == 10
+    assert len(pipe.snapshots("s")) == 1
+    # id nullable here, non-nullable in the stage: still the same columns
+    nullable = spark.range(10, 15).select(
+        F.when(F.col("id") >= 0, F.col("id")).alias("id"), F.col("id").cast("string").alias("v")
+    )
+    assert nullable.schema["id"].nullable
+    out = pipe.append_delta("s", nullable, ["id"])
+    assert out.count() == 15
+    assert pipe._load()["stages"]["s"]["rows"] == 15

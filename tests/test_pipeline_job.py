@@ -40,11 +40,11 @@ def test_kill_midway_resume(spark, sf_dir, tmp_path, monkeypatch):
     original = CheckpointedPipeline.run_stage
     state = {"killed": False}
 
-    def flaky(self, stage, build, partition_by=None):
+    def flaky(self, stage, build):
         if stage == "pip" and not state["killed"]:
             state["killed"] = True
             raise RuntimeError("simulated executor loss mid-join")
-        return original(self, stage, build, partition_by)
+        return original(self, stage, build)
 
     monkeypatch.setattr(CheckpointedPipeline, "run_stage", flaky)
     with pytest.raises(RuntimeError):
@@ -87,11 +87,11 @@ def test_curation_job_run_and_kill_resume(spark, sf_dir, tmp_path, monkeypatch):
     original = CheckpointedPipeline.run_stage
     state = {"killed": False}
 
-    def flaky(self, stage, build, partition_by=None):
+    def flaky(self, stage, build):
         if stage == "decontam" and not state["killed"]:
             state["killed"] = True
             raise RuntimeError("simulated loss mid-decontam")
-        return original(self, stage, build, partition_by)
+        return original(self, stage, build)
 
     monkeypatch.setattr(CheckpointedPipeline, "run_stage", flaky)
     with pytest.raises(RuntimeError):
